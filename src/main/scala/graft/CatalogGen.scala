@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Generates the README operator catalog FROM the compiled registry
-  * ([[Registry.modules]]) so the docs cannot drift from the code: every
+  * ([[SparkEntry.modules]]) so the docs cannot drift from the code: every
   * registered query appears, each mapped to its implementing object and
   * source file. CatalogSpec asserts README ⊇ SparkEntry.queries (and no
   * stale extras), so adding a query without re-running
@@ -108,10 +108,9 @@ object CatalogGen {
 
   def render(): String = {
     val srcIdx = sourceIndex
-    val modules = Registry.modules
-    val owner: Map[String, Registry.Module] = (for {
-      m <- modules; q <- m.queries
-    } yield q -> m).toMap
+    val owner: Map[String, String] = (for {
+      m <- SparkEntry.modules; q <- m.all.keys
+    } yield q -> m.moduleName).toMap
     val registered = SparkEntry.queries.keySet
     val sb = new StringBuilder
     sb.append(Begin).append('\n')
@@ -128,8 +127,8 @@ object CatalogGen {
         sb.append(s"\n### $title\n\n$oneLiner\n\n")
         sb.append("| query | implementation |\n|---|---|\n")
         for (q <- qs) {
-          val mod = owner.get(q).map(_.simpleName).getOrElse("?")
-          val path = owner.get(q).flatMap(m => srcIdx.get(m.simpleName))
+          val mod = owner.getOrElse(q, "?")
+          val path = owner.get(q).flatMap(srcIdx.get)
           val impl = path.map(p => s"[`$mod`]($p)").getOrElse(s"`$mod`")
           sb.append(s"| `$q` | $impl |\n")
         }
@@ -140,7 +139,7 @@ object CatalogGen {
       sb.append("\n### Uncategorized\n\n(new family — add a one-liner in CatalogGen)\n\n")
       sb.append("| query | implementation |\n|---|---|\n")
       for (q <- unlisted) {
-        val mod = owner.get(q).map(_.simpleName).getOrElse("?")
+        val mod = owner.getOrElse(q, "?")
         sb.append(s"| `$q` | `$mod` |\n")
       }
     }

@@ -58,13 +58,18 @@ object GraftExtensions {
 
   /** Lazy self-registration path for the DataFrame API (no session config
     * needed): installs every native function as a temp function with the
-    * SAME arity-guarded builders the extension path uses. Idempotent.
+    * SAME arity-guarded builders the extension path uses. Idempotent: a name
+    * the session already has (from the extension or an earlier call) is
+    * left alone, so repeat calls log no "replaced a previously registered
+    * function" warning.
     */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
+  }
 
   /** Arity gate: a named, actionable error at analysis time instead of a
     * raw IndexOutOfBounds from a blind `args(i)`.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Ad-hoc profiling main for the optimization rounds: same session shape
@@ -30,14 +29,7 @@ object Profile {
     // discipline): entries whose timed work is a memoized build must
     // re-run it, not hit the memo
     val fresh = args.length > 4 && args(4) == "fresh"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     Bench.populate(spark, sfDir)
     val qs = SparkEntry.queries
     for (name <- names) qs.get(name) match {

@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Output-boundary type contract for every [[SparkEntry.queries]] result.
   *
@@ -37,14 +38,7 @@ object Verify {
     // the driver always runs the full dump)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -62,25 +56,20 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
+    spark.stop()
+  }
+
+  /** `oracle_sql.json` text. Jackson escapes backslash, quote and ALL
+    * control chars — a tab or CR in oracle SQL would otherwise make a
+    * strict reader (Python's json.load) fail and silently zero the round's
+    * correctness.
+    */
+  def oracleJson(oracle: Map[String, String]): String =
     // The driver keys its oracle lookup by the output directory basename —
     // "<name>.parquet" (CORRECTNESS_r05 resolved all 269 entries this way;
     // the bare-name dual keys the earlier rounds hedged with are dropped).
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(s"$k.parquet")}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-  }
+    new ObjectMapper().writeValueAsString(
+      oracle.map { case (k, v) => s"$k.parquet" -> v }.asJava)
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * hash-comparable); `n_set` and the exact twin let any consumer apply it
   * locally.
   */
-object BitmapRollup {
+object BitmapRollup extends graft.QueryModule {
 
   /** Bits per word (sign bit unused). */
   val WordBits = 63

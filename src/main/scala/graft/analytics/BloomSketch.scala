@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * probe side; this is exactly the semi-join-pruning data flow Spark's
   * runtime filter uses, with every number checkable.
   */
-object BloomSketch {
+object BloomSketch extends graft.QueryModule {
 
   /** Words in the filter. Each word carries 63 usable bits (bit 63 stays
     * clear: DuckDB's left shift is overflow-CHECKED, so `1::BIGINT << 63`

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale: one cell-keyed aggregate; margins join back as broadcasts; the
   * fold runs over R·C rows (category-bounded, not row-bounded).
   */
-object ChiSquare {
+object ChiSquare extends graft.QueryModule {
 
   def chiSquare(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

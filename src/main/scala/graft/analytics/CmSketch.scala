@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * anyway; at 100 TB the d×W counter grid (a few KB) is the only state
   * crossing the final merge, and the estimate join broadcasts it.
   */
-object CmSketch {
+object CmSketch extends graft.QueryModule {
 
   /** Sketch width (counters per hash row). Deliberately small so bucket
     * collisions actually occur at test scale and the over-count column is

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * on value domains, one running sum — nothing row-quadratic; the model
   * table broadcasts.
   */
-object ConformalInterval {
+object ConformalInterval extends graft.QueryModule {
 
   /** Miscoverage level α — the interval targets 1−α = 90%. */
   val AlphaPct = 10

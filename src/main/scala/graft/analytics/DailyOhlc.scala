@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale: one day-partitioned window pass + one keyed aggregate; day keys
   * partition evenly and the window never sees more than a day's events.
   */
-object DailyOhlc {
+object DailyOhlc extends graft.QueryModule {
 
   def dailyOhlc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

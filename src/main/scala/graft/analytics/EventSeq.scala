@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * partial aggregate, so the shuffle carries ≤ (groups × 64) rows no matter
   * the scale factor.
   */
-object EventSeq {
+object EventSeq extends graft.QueryModule {
 
   /** Per-user event-type transition matrix. `lag` over (ts, event_id) gives
     * the previous event per user; counts aggregate to (from, to) cells and

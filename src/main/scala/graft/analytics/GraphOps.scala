@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * (85, 100). Products stay far inside signed-64: rank ≤ ~n·Scale = 2.5e10,
   * edge weight ≤ 6e5 at sf0.1 → rank·w ≤ 1.5e16.
   */
-object GraphOps {
+object GraphOps extends graft.QueryModule {
 
   /** Fixed-point units per 1.0 of rank mass. */
   val Scale = 1000000000L

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * compare. All money sums ride DECIMAL(14,2) (order-independent exact
   * addition) and convert to DOUBLE once at the edge, the TpchQueries rule.
   */
-object GroupingSets {
+object GroupingSets extends graft.QueryModule {
 
   private def orders(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

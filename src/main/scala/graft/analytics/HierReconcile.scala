@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * self-equi-joins on (series, month−12/−24) — shifted-key joins, no
   * windows, no cross products; the hierarchy dims broadcast.
   */
-object HierReconcile {
+object HierReconcile extends graft.QueryModule {
 
   def hierReconcile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

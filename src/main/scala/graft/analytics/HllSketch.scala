@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * deliberately omitted; test corpora run at n ≫ m where the raw
   * estimator is the right branch anyway.
   */
-object HllSketch {
+object HllSketch extends graft.QueryModule {
 
   /** Registers (m = 2^6). */
   val HllM = 64

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * billion rows the same statistic runs on the q-digest's cells), one
   * max. The global window rides distinct values only.
   */
-object KsDistance {
+object KsDistance extends graft.QueryModule {
 
   /** Two-sample KS critical coefficient at α = 0.05. */
   val CritAlpha05 = 1.358

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * of visit order — the property that lets 1000 executors run a round
   * without coordination.
   */
-object LpaCommunities {
+object LpaCommunities extends graft.QueryModule {
 
   /** Synchronized propagation rounds, unrolled identically in the twin. */
   val Rounds = 3

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Scale: identical shape to [[KsDistance]] — value-keyed counts, one
   * running sum over DISTINCT values, one-row output.
   */
-object MannWhitney {
+object MannWhitney extends graft.QueryModule {
 
   def mannWhitney(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * vocabulary-sized. MinSupport prunes the rule table BEFORE the join
   * against item totals.
   */
-object MarketBasket {
+object MarketBasket extends graft.QueryModule {
 
   /** Minimum basket count for a pair to become a rule. */
   val MinSupport = 50L

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * label table is nation-sized here and node-sized in general (broadcast
   * envelope documented at the join).
   */
-object Modularity {
+object Modularity extends graft.QueryModule {
 
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * the closed form cannot divide by zero on degenerate (constant-
   * feature) corpora.
   */
-object OlsRegression {
+object OlsRegression extends graft.QueryModule {
 
   /** Ridge strength — ONE definition interpolated into both engines. */
   val Lambda = 10

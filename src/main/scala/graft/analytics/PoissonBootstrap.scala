@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * statistics of the replicate means — min/max at B=[[Replicates]],
   * ≈ an 88% interval) carried on every row.
   */
-object PoissonBootstrap {
+object PoissonBootstrap extends graft.QueryModule {
 
   /** Bootstrap replicates — one weighted aggregate computes them all. */
   val Replicates = 16

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * reaches ⌈q·n⌉ — emitted beside the exact order statistic and the
   * achieved rank, so the sketch's error is an audited number.
   */
-object QDigest {
+object QDigest extends graft.QueryModule {
 
   /** Compression parameter: digest ≤ 3k nodes, rank error ≤ L·n/k. */
   val K = 64

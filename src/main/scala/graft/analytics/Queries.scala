@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * [[OracleSql]]. Window `row_number` orderings get the same treatment
   * (SURVEY §7.4 "ties in top-k").
   */
-object Queries {
+object Queries extends graft.QueryModule {
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -376,4 +376,6 @@ object Queries {
     "mv_diagnosis_by_age_group" -> (mvDiagnosisAge _),
     "mv_procedure_volume" -> (mvProcedureVol _),
     "readme_record_counts" -> (readmeRecordCounts _))
+
+  val oracle: Map[String, String] = OracleSql.all
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * objects on one side and float64 on the other, tripping dtype-sensitive
   * downstream comparisons.
   */
-object Reshape {
+object Reshape extends graft.QueryModule {
 
   /** Monthly (revenue, orders, customers) melted to metric rows. */
   def unpivotMonthly(spark: SparkSession, dir: String): DataFrame = {

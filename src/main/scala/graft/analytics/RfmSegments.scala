@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * of exact population quantiles; the alternative (approx percentile
   * cuts) trades exactness and is the documented swap at extreme scale.
   */
-object RfmSegments {
+object RfmSegments extends graft.QueryModule {
 
   /** Quintile count. One value, both engines. */
   val Tiles = 5

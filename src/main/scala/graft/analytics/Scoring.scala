@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * millionths via `1000000 div n_touches` — no float ever crosses a
   * shuffle, so both operators hash-compare against DuckDB.
   */
-object Scoring {
+object Scoring extends graft.QueryModule {
 
   /** Deciles in the gains table. */
   val Deciles = 10

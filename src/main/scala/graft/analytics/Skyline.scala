@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * constant ~tens), never customer-cardinality. The O(n²) pairwise
   * dominance join this replaces is the textbook anti-pattern.
   */
-object Skyline {
+object Skyline extends graft.QueryModule {
 
   def skylineFrontier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

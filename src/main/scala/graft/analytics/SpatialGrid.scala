@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * A denser center side flips to shuffle join on the same key — no plan
   * rewrite.
   */
-object SpatialGrid {
+object SpatialGrid extends graft.QueryModule {
 
   /** Query radius in coordinate units = grid cell size. One value, both
     * engines.

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale: two distinct-value rank tables (running sums over value
   * domains), two lookup joins back to the rows, one moment aggregate.
   */
-object SpearmanCorr {
+object SpearmanCorr extends graft.QueryModule {
 
   def spearmanCorr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

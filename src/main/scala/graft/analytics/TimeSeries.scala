@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * single divisions of integer counts; bin boundaries come from `ntile`
   * over a total order — all hash-identical across engines.
   */
-object TimeSeries {
+object TimeSeries extends graft.QueryModule {
 
   /** Equi-depth bins per event type. */
   val Bins = 8

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * final DOUBLE cast lands identical bits. Filters and constants are shared
   * Scala values interpolated into both engines.
   */
-object TpchQueries {
+object TpchQueries extends graft.QueryModule {
 
   /** Q1 ships-on-or-before cutoff. */
   val Q1Cutoff = "2000-12-01"

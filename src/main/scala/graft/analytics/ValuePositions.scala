@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Scale: the window partitions by year (bounded partitions of a filtered
   * slice); no global sort. The high-value filter is pushed to the scan.
   */
-object ValuePositions {
+object ValuePositions extends graft.QueryModule {
 
   /** Price floor bounding the reported slice. One value, both engines. */
   val PriceFloor = 450000

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * key tiebreaks); sliding sums/averages go through DECIMAL so frame
   * accumulation order cannot produce float drift between engines.
   */
-object WindowExtras {
+object WindowExtras extends graft.QueryModule {
 
   /** Sliding-frame moving average (ROWS BETWEEN 3 PRECEDING AND CURRENT). */
   def movingAvg(spark: SparkSession, dir: String): DataFrame = {

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * rounded percentage. The unchanged DuckDB oracle recomputes the whole
   * pipeline declaratively — the kernel's parity gate.
   */
-object CdcChunks {
+object CdcChunks extends graft.QueryModule {
 
   /** Tokens hashed per boundary test (the gram width). */
   val GramK = 3

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * boilerplate add a document-frequency cap or go through MinHash-LSH whose
   * fan-out is bounded by band-bucket size).
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   /** Tokens of the normalized text (shared by every dedup family). */
   private[dedup] def tokens: Column = split(trim(lower(col("text"))), "\\s+")

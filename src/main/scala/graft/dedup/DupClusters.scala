@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * diameters the same loop runs with checkpointing every ~10 rounds to cut
   * lineage (or large-star/small-star for power-law graphs).
   */
-object DupClusters {
+object DupClusters extends graft.QueryModule {
 
   // label table materialized once per (application, corpus): the fixpoint
   // loop is an index build, reused by every downstream consumer

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * `levenshtein` is a codegen'd built-in in both engines with identical
   * unit-cost semantics, so the verify stage hash-matches bit-for-bit.
   */
-object FuzzyJoin {
+object FuzzyJoin extends graft.QueryModule {
 
   /** ONE definition each, interpolated into both engines. */
   val BlockTokens = 3

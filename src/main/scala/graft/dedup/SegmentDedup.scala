@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * like [[Dedup.ngramJaccardCapped]] caps shingle df; the verify cost is
   * Σ block², so the cap is THE knob.
   */
-object SegmentDedup {
+object SegmentDedup extends graft.QueryModule {
 
   /** Non-overlapping segment width in tokens — one value, both engines. */
   val SegTokens = 10

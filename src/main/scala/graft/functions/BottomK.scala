@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * swap in a bounded heap, the algebra (commutative, associative, idempotent
   * zero) is unchanged.
   */
-object BottomK {
+object BottomK extends graft.QueryModule {
 
   /** Sketch size — ONE definition interpolated into the Spark query and the
     * DuckDB oracle (parity rule).

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * (too big to broadcast) and the skew is known — e.g. the staging feed's
   * null-date key in the reference's incremental ordering.
   */
-object SkewJoin {
+object SkewJoin extends graft.QueryModule {
 
   /** Join `left` and `right` on `key`, salting `left` by a hash of
     * `leftUniqueCol`. Semantics identical to `left.join(right, key)` for an

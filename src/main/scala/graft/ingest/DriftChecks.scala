@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * where a 1-ulp JVM-vs-libm divergence (~1e-17 at these magnitudes) sits
   * eleven orders below the rounding grid.
   */
-object DriftChecks {
+object DriftChecks extends graft.QueryModule {
 
   /** PSI bucket count over the price domain. */
   val PsiBuckets = 10

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * sequence-gap detection — the three ops a long-lived ingest grows into
   * (feeds drift, compliance wants keys masked, upstream loses batches).
   */
-object EtlExtras {
+object EtlExtras extends graft.QueryModule {
 
   /** Old-generation rows (even event_id) arrive WITHOUT the later-added
     * `value`/`props` columns. The id filter is null-rejecting on BOTH

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * parallelizes per edge and a scheduler can run only the edges a load
   * touched.
   */
-object FkOrphans {
+object FkOrphans extends graft.QueryModule {
 
   /** FK edges audited: (edge name, child rows loader, parent loader,
     * child key, parent key).

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * contract.) The ledger also carries the POST-CONDITION the reference
   * gets from its FK constraints: zero orphans remain at every level.
   */
-object ForgetFlow {
+object ForgetFlow extends graft.QueryModule {
 
   /** The forget request: customers whose md5(custkey) starts with 'a'
     * (≈1/16 of subjects — an explicit, predicate-opaque key list; ONE

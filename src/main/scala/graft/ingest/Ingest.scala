@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * as the build side of a broadcast, or co-partitions both sides on the key
   * at scale (bucketed staging). Nothing collects to the driver.
   */
-object Ingest {
+object Ingest extends graft.QueryModule {
 
   /** Event-type domain, the CHECK-constraint analog (P7). */
   val EventTypes: Seq[String] = Seq("click", "view", "signup", "purchase", "error")

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{MapType, StringType, StructType}
   * of dropped silently. Numeric statistics ride exact int64 (`try_cast`
   * to BIGINT) so no float sum crosses a shuffle.
   */
-object JsonOps {
+object JsonOps extends graft.QueryModule {
 
   /** Typed-path rollup: extract `$.k` as BIGINT, band it by tens, and
     * roll up event counts + exact cents revenue per (event_type, band).

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * single-partition pass. Lateness is integer milliseconds end to end;
   * bands are CASE cuts; nothing floats.
   */
-object LatenessProfile {
+object LatenessProfile extends graft.QueryModule {
 
   /** Contiguous arrival ids per shard; each within-shard window task sees
     * at most this many rows regardless of corpus size. */

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * bounded slices via posexplode rather than materializing per-frame copies
   * of the whole payload.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   /** One media record entering the decode kernel. */
   final case class MediaIn(doc_id: Long, media: Array[Byte], media_type: String)

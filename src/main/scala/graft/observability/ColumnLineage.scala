@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * as literals — a wrong walk (missed Window refs, dropped Generate
   * output, lost join-condition edge) diverges from it.
   */
-object ColumnLineage {
+object ColumnLineage extends graft.QueryModule {
 
   type Src = (String, String) // (table, column)
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * updated deliberately when a plan change is intended), same contract as
   * a golden-file test.
   */
-object PlanFingerprint {
+object PlanFingerprint extends graft.QueryModule {
 
   def fingerprint(df: DataFrame): Map[String, Long] = {
     def walk(p: SparkPlan): Seq[SparkPlan] = {

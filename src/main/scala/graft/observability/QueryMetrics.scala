@@ -33,7 +33,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * machinery reads the right numbers, using quantities any engine can
   * recompute.
   */
-object QueryMetrics {
+object QueryMetrics extends graft.QueryModule {
 
   /** Totals a scale assertion usually wants. `scanRows`/`scanBytes` cover
     * every file source leaf; shuffle totals cover every exchange in the

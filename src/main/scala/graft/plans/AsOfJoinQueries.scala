@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * microseconds (the exec's LongType contract); the delay output stays in
   * integer microseconds end-to-end, so the hash compare is exact.
   */
-object AsOfJoinQueries {
+object AsOfJoinQueries extends graft.QueryModule {
 
   /** Tolerance for the bounded variant: 2 days in epoch micros. Chosen to
     * split the observed delay distribution (median ~30 h, p90 ~4 days), so

@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * Money rides exact integer cents; every arm of a fixture shares one
   * oracle — identical results, different plans.
   */
-object EagerAggregationQueries {
+object EagerAggregationQueries extends graft.QueryModule {
 
   private def pipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * modulus, so the union of the two partitions is exactly the raw table
   * the oracle recomputes from.
   */
-object IvmSetQueries {
+object IvmSetQueries extends graft.QueryModule {
 
   /** Late-batch carve-out modulus (~10% of lineitems arrive "late"). */
   val LateMod = 10

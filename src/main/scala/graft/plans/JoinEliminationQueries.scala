@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * session configuration; `install` needs none — same dual path as the
   * native functions).
   */
-object JoinEliminationQueries {
+object JoinEliminationQueries extends graft.QueryModule {
 
   /** The wide enriched view: orders + per-order item stats + per-customer
     * order frequency. Both enrichment sides are Aggregates grouped exactly

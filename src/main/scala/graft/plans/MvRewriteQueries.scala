@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * the edge (the [[graft.analytics.GroupingSets]] discipline), so the
   * merged sum is bit-identical to the direct sum.
   */
-object MvRewriteQueries {
+object MvRewriteQueries extends graft.QueryModule {
 
   /** The view's defining pipeline over the raw table. ONE definition:
     * registration, materialization, and the oracle all derive from it.

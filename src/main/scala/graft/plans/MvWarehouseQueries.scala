@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * SQL): identical rows, different plan — while MvRewriteSpec gates that
   * the executed plans scan `mv_*` parquet, never the fact table.
   */
-object MvWarehouseQueries {
+object MvWarehouseQueries extends graft.QueryModule {
 
   private val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

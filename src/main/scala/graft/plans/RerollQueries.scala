@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query still plans through the stock Expand path (RerollSpec gates both
   * plan shapes).
   */
-object RerollQueries {
+object RerollQueries extends graft.QueryModule {
 
   /** Rule on, cost gate OFF (probeRows=0): the FORCED arm — RerollSpec
     * gates the below-Expand aggregate shape here deterministically at any

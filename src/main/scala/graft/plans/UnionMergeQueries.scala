@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * NULLS FIRST explicitly on both engines — the padded grain keys are
   * exactly where Spark's and DuckDB's default null order disagree.
   */
-object UnionMergeQueries {
+object UnionMergeQueries extends graft.QueryModule {
 
   /** One branch: `orders` at the given grain, with absent grain keys
     * padded as typed NULL literals so the three branches are

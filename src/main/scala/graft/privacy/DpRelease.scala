@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * noise join is against a ~50-row broadcast literal. Release cost is the
   * aggregate itself.
   */
-object DpRelease {
+object DpRelease extends graft.QueryModule {
 
   /** Privacy budget ε. α = e^(−ε) is the geometric decay. */
   val Epsilon = 1.0

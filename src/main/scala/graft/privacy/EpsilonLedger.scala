@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * at 100 TB the ledger is a catalog table that never touches the facts
   * beyond each release's own aggregate.
   */
-object EpsilonLedger {
+object EpsilonLedger extends graft.QueryModule {
 
   /** Policy cap the ledger reports headroom against. One value, both
     * engines.

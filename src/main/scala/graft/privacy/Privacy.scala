@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * broadcast. Equivalence-class tables are bounded by the QI domain
   * (|age_group|×|sex|×|location| ≈ 625), so the audit rollups are tiny.
   */
-object Privacy {
+object Privacy extends graft.QueryModule {
 
   /** k-anonymity threshold: an equivalence class smaller than K is a
     * re-identification risk. One value, both engines.

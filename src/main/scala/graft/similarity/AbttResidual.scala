@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * (probes broadcast). The DuckDB oracle stacks the full model CTE chain
   * under the audit, so model AND measurement replay end to end.
   */
-object AbttResidual {
+object AbttResidual extends graft.QueryModule {
 
   /** Fixed-point scale for the cosine statistics. */
   val CosScale = 1000000000L

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale: one (label, cohort, pos)-keyed aggregate with map-side partials;
   * the per-label join is |labels|-sized.
   */
-object CentroidDrift {
+object CentroidDrift extends graft.QueryModule {
 
   def drift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * All counts integer; recalls are single divisions by the exact
   * filtered baseline's result count.
   */
-object FilteredAnn {
+object FilteredAnn extends graft.QueryModule {
 
   def filteredAnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * the identical [[Rounds]] hops CTE by CTE, so path, landing, AND the
   * exact-recall flag hash-compare.
   */
-object GraphSearch {
+object GraphSearch extends graft.QueryModule {
 
   /** Out-degree of the navigable graph. */
   val GraphDegree = 8

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * 100 TB this is a single pass with no data movement beyond the 16-cell
   * aggregate.
   */
-object HadamardRotation {
+object HadamardRotation extends graft.QueryModule {
 
   /** Dimensionality (2^[[Stages]]) and butterfly depth. */
   val Dim = 64

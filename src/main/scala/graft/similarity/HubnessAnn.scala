@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * Determinism: cosine via the codegen'd kernel / in-list-order DuckDB
   * twin; ranks total-ordered (cos desc, nid); histograms integer-exact.
   */
-object HubnessAnn {
+object HubnessAnn extends graft.QueryModule {
 
   def hubnessAnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * joins a [[JlProbes]]-row broadcast against the corpus — one pass,
   * O(probes × n), the same envelope as the brute-force recall baseline.
   */
-object JlProjection {
+object JlProjection extends graft.QueryModule {
 
   /** Input embedding dimensionality (the corpus contract). */
   val InDim = 64

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * oracle replays ALL [[Rounds]] greedy rounds as unrolled CTEs, so the
   * whole trajectory — not just the final table — is hash-verified.
   */
-object KCenterCoreset {
+object KCenterCoreset extends graft.QueryModule {
 
   /** Greedy picks after the seed; the coreset is [[Rounds]]+1 centers. */
   val Rounds = 8

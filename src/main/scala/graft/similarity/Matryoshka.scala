@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * prefixes against); all three prefix scores ride the SAME pass — one
   * scan, one window sort per metric on the probe-bounded pair set.
   */
-object Matryoshka {
+object Matryoshka extends graft.QueryModule {
 
   /** Prefix widths evaluated against the full vector. */
   val PrefixDims: Seq[Int] = Seq(8, 16, 32)

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * therefore pins the ITERATE against a same-round float reference, not
   * against the asymptotic eigenvector.
   */
-object PcaPower {
+object PcaPower extends graft.QueryModule {
 
   /** Embedding dimensionality (the corpus's fixed width). */
   val Dims = 64

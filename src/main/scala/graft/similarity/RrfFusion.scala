@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * lists come from the inverted index and the IVF index respectively; the
   * fusion algebra (and this oracle) are unchanged.
   */
-object RrfFusion {
+object RrfFusion extends graft.QueryModule {
 
   /** RRF smoothing constant — the value the original paper fixed and every
     * production implementation (Elasticsearch, Vespa, OpenSearch) defaults

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * identically in both engines — the DuckDB twin replays the whole pipeline
   * including training.
   */
-object SemDedup {
+object SemDedup extends graft.QueryModule {
 
   /** Within-cell near-duplicate threshold — matches the exact
     * `sim_cosine_pairs` baseline's τ so the drop ledger is comparable

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * (identical order in the DuckDB SQL), thresholds compare that exact
   * double, and displayed values go through the shared closed-form round.
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   /** graft_cosine / graft_plane_dot registered once per session so
     * `expr("graft_cosine(a,b)")` is usable anywhere (the native-Expression

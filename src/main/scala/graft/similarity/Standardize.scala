@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * `sqrt` is correctly rounded by IEEE spec, so the final std is bit-equal
   * on both engines.
   */
-object Standardize {
+object Standardize extends graft.QueryModule {
 
   /** Fixed-point scale (2^20): components are ≲ 1 in magnitude, so q fits
     * in 21 bits and q² in 42 — DECIMAL accumulation is exact at any row

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Scale: two keyed passes over the fact (count/sum, then deviation
   * sums), a |strata|-row everything-else. The pivot join broadcasts.
   */
-object NeymanAllocation {
+object NeymanAllocation extends graft.QueryModule {
 
   /** Total sample budget the allocation distributes. */
   val SampleBudget = 1000

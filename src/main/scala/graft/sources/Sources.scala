@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * global sort, which would shuffle the full corpus to sample 12 % of it);
   * the assignment join broadcasts the 16-row pool.
   */
-object Sources {
+object Sources extends graft.QueryModule {
 
   /** S2: deterministic sample — hash-bucket filter (md5 first hex digit in
     * 0..1 → exactly-reproducible ~1/8 sample) instead of

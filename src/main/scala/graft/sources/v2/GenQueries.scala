@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * table from `range(n)` — the oracle checks the whole connector stack
   * (planning, pushdown, partition readers) end-to-end, not just the query.
   */
-object GenQueries {
+object GenQueries extends graft.QueryModule {
 
   /** ONE definition of the scan shape, interpolated into the oracle. */
   val Rows = 1000000L

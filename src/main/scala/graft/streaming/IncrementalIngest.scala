@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * re-running after any failure never double-lands a batch — the property
   * the reference approximates with per-record rollback.
   */
-object IncrementalIngest {
+object IncrementalIngest extends graft.QueryModule {
 
   /** The events schema (nanos already truncated to micros by the batch
     * loader; streams read the landed micros form).

@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale notes: both paths shuffle once on user_id; state (streaming) is one
   * open session per active user, bounded by the watermark horizon.
   */
-object Sessionize {
+object Sessionize extends graft.QueryModule {
 
   val GapMinutes = 30
 

@@ -50,7 +50,7 @@ import java.util.concurrent.ConcurrentHashMap
   * first-claims (`row_number() OVER (PARTITION BY band, bucket ORDER BY
   * doc_id)`), and the per-language survivor ledger exactly.
   */
-object StreamNearDedup {
+object StreamNearDedup extends graft.QueryModule {
 
   /** Every 3rd document re-arrives as a near-dup "syndicated mirror":
     * fresh id, a few appended boilerplate tokens (median corpus doc has
@@ -125,7 +125,7 @@ object StreamNearDedup {
     * every consumer put 10–14 s of a 15 s wall into addBatch at sf0.1
     * (see the kernel's scaladoc). After the swap the full sf0.1 stream
     * runs 4.6–5.4 s quiet, and the remainder is measured HARNESS FLOOR,
-    * not per-row work (graft.StreamProfile: a 100-row feed costs ~8 s on
+    * not per-row work (measured on local[32]: a 100-row feed costs ~8 s on
     * a cold session — codegen warm-up + state-store init — and the warm
     * fixed cost is ≈ 1.5 s startup + ≈ 2–3 s batch-0 scheduling/commit +
     * ≈ 1 s for the watermark's no-data timeout batch; the 6.7k-doc feed
@@ -133,8 +133,6 @@ object StreamNearDedup {
     * same coefficients, same band buckets), so the DuckDB oracle text is
     * unchanged.
     */
-  private[graft] def bandedBatch(docs: DataFrame): DataFrame = banded(docs)
-
   private def banded(docs: DataFrame): DataFrame = {
     graft.GraftExtensions.registerAll(docs.sparkSession)
     docs

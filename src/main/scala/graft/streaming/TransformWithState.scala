@@ -38,7 +38,7 @@ import java.util.concurrent.ConcurrentHashMap
   * event-time mode instead). TransformWithStateSpec proves the ordered
   * two-batch run equals the one-batch run equals the oracle.
   */
-object TransformWithState {
+object TransformWithState extends graft.QueryModule {
 
   /** One event entering the ledger (value floored to a long — the repo's
     * integer-exactness rule for cross-engine sums).

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * combine (alphabet²-bounded table, broadcast back); the per-doc pass is
   * map-side — the same two-scan shape as TF-IDF, linear at 100 TB.
   */
-object BigramNovelty {
+object BigramNovelty extends graft.QueryModule {
 
   /** Corpus-frequency floor under which a bigram counts as rare. */
   val RareMax = 50L

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * shuffle for the counts, one doc_id shuffle for the rebuild; nothing
   * pairwise anywhere.
   */
-object BoilerplateStrip {
+object BoilerplateStrip extends graft.QueryModule {
 
   /** Segment stride (tokens) — same granularity as `dedup_segment_exact`. */
   val SegTokens: Int = graft.dedup.SegmentDedup.SegTokens

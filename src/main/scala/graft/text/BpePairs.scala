@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * the vocab table is millions of rows — the pair count is a small
   * aggregate no matter the corpus size.
   */
-object BpePairs {
+object BpePairs extends graft.QueryModule {
 
   /** Merge candidates reported. One value, both engines. */
   val TopPairs = 20

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * merge loop costs the same as at 100 GB, only the initial word count
   * grows. Memoized per (app, dir) since the driver loop is eager.
   */
-object BpeTrain {
+object BpeTrain extends graft.QueryModule {
 
   /** Merge rounds learned; unrolled identically in the DuckDB twin. */
   val Rounds = 5

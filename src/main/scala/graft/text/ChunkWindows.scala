@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * `transform`/`slice` inside codegen — no explode-then-window, no
   * shuffle); the dedup shuffles 16-byte hashes, never text.
   */
-object ChunkWindows {
+object ChunkWindows extends graft.QueryModule {
 
   /** Shared geometry — aliases of the repo-wide definition. */
   val ChunkTokens: Int = TextAnalysis.ChunkW

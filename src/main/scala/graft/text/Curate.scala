@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * (near-dup pairs) and broadcast into a left-anti join; the rollup shuffles
   * once on lang.
   */
-object Curate {
+object Curate extends graft.QueryModule {
 
   val MinChars = 100
   val NearDupTau = 0.5

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * [[NumBuckets]]-row broadcast for corpus counts, and literal-table ln
   * joins. Nothing downstream of the first aggregate scales with tokens.
   */
-object DomainKl {
+object DomainKl extends graft.QueryModule {
 
   /** Hashed unigram buckets (shared arity with [[DsirWeights]]). */
   val NumBuckets = 512

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * banded two-phase rank of `win_global_rank` (same output contract); the
   * scoring itself never leaves linear map-side work.
   */
-object DsirWeights {
+object DsirWeights extends graft.QueryModule {
 
   /** Hashed feature buckets — fixed-width feature space at any corpus. */
   val NumBuckets = 512

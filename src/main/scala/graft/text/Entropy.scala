@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * from the inner join and surface as a missing doc row — a LOUD failure
   * mode by design (DriftScoringSpec pins the headroom).
   */
-object Entropy {
+object Entropy extends graft.QueryModule {
 
   /** Fixed-point scale for the inlined ln values (units of 1e-12). */
   val LnScale = 1000000000000L

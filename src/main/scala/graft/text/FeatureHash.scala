@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * dictionary. One map-side-combined aggregate; the audit table is
   * [[Buckets]]-bounded.
   */
-object FeatureHash {
+object FeatureHash extends graft.QueryModule {
 
   /** Hash-space width. Deliberately small so the audit shows real
     * collisions at test scale; production widths (2^18+) make collisions

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * one keyed aggregate on the bucket id. Integer counts and one final
   * rounded division — hash-stable.
   */
-object LengthBuckets {
+object LengthBuckets extends graft.QueryModule {
 
   /** Bucket width in tokens — one value, both engines. */
   val BucketTokens = 16

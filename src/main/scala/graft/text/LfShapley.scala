@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * one 4-row aggregate ends it. Nothing shuffles but the final tiny
   * rollup.
   */
-object LfShapley {
+object LfShapley extends graft.QueryModule {
 
   /** Common denominator of the 4-player coalition weights ×4! folded:
     * w(|S|) ∈ {3,1,1,3}/12 for |S| = 0..3.

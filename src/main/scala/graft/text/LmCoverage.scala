@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * join; the per-doc rollup is one shuffle on doc_id. Documents with fewer
   * than 2 tokens have no bigrams and are absent by definition.
   */
-object LmCoverage {
+object LmCoverage extends graft.QueryModule {
 
   /** Size of the "common bigram" reference table — one value, both engines. */
   val LmTopBigrams = 200

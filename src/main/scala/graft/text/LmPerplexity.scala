@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * division runs AFTER the integer sum crosses the shuffle, so any
   * parallelism yields the same bits (PropertySpec-listed).
   */
-object LmPerplexity {
+object LmPerplexity extends graft.QueryModule {
 
   def lmPerplexity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

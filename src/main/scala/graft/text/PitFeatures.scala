@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * (a nullable numeric output would be a dtype hazard, the
   * [[graft.warehouse.Scd2]] OpenEnd convention).
   */
-object PitFeatures {
+object PitFeatures extends graft.QueryModule {
 
   def pitFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * the memoized pair table (near-dup-sized, orders smaller than the
   * corpus).
   */
-object SourceAblation {
+object SourceAblation extends graft.QueryModule {
 
   def sourceAblation(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * division, emitted with the identical expression shape in the DuckDB
   * oracle, so the float hash-compare is bit-exact.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.QueryModule {
 
   /** Shared stopword list for quality scoring (English function words —
     * the quality heuristic counts their density, a standard content-vs-

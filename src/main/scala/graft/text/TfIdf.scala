@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * rounded, so a log idf could never hash-match DuckDB; rank order is
   * identical either way because log is monotonic.
   */
-object TfIdf {
+object TfIdf extends graft.QueryModule {
 
   /** Top terms kept per document. */
   val TopK = 5

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * statistics are unchanged because band boundaries are hash-order
   * boundaries.
   */
-object TrainingOrder {
+object TrainingOrder extends graft.QueryModule {
 
   def trainingOrder(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * catalog-sized table, never corpus rows; the per-domain sizes reduce via
   * one map-side-combined count. At 100 TB only the count scan grows.
   */
-object UniMaxMix {
+object UniMaxMix extends graft.QueryModule {
 
   /** Max epochs (full repeats) any domain may contribute. One value, both
     * engines.

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * aggregate keyed on lf_name ends it. Ratios are exact integer counts
   * over one final division each.
   */
-object WeakLabels {
+object WeakLabels extends graft.QueryModule {
 
   /** Token count at/above which lf_length votes keep. */
   val LenKeep = 60

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * 7 years), and at 100 TB the input is the file manifest, not a data
   * scan: only the one per-month count aggregate below touches the fact.
   */
-object BinPack {
+object BinPack extends graft.QueryModule {
 
   /** Target rows per compacted output file. One value, both engines. */
   val TargetRows = 2500L

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * interval self-joins; at 100 TB the ledger is the transaction fact
   * plus one recorded_at column, exactly how bitemporal is deployed.
   */
-object Bitemporal {
+object Bitemporal extends graft.QueryModule {
 
   /** Recording lag for the late-arriving carve-out. */
   val LagDays = 7

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * no extra shuffle beyond the keyed combine; probing joins the bounded
   * probe set against the broadcast word table.
   */
-object BloomManifest {
+object BloomManifest extends graft.QueryModule {
 
   /** Words per file filter; 63 usable bits each (DuckDB's `<<` is
     * overflow-checked, so bit 63 stays clear — see BloomSketch.WordBits).

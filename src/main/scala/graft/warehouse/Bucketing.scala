@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * plan contains zero ShuffleExchange operators and returns rows identical
   * to the plain (shuffling) join.
   */
-object Bucketing {
+object Bucketing extends graft.QueryModule {
 
   /** Land `df` as a bucketed + in-bucket-sorted catalog table. Idempotent
     * across JVMs: the in-memory catalog forgets tables between sessions

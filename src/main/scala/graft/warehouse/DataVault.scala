@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * DECIMAL — the [[PartitionedFact.partitionChecksums]] discipline), so
   * two loads agree iff their ledgers agree, without comparing any rows.
   */
-object DataVault {
+object DataVault extends graft.QueryModule {
 
   private def ck(c: Column): Column =
     (sum(Md5Hash.h32(c).cast("decimal(38,0)")) % Md5Hash.P)

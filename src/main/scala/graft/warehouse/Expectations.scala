@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Thresholds are plan constants interpolated into both engines; the
   * pass flag is integer — the whole ledger hash-compares.
   */
-object Expectations {
+object Expectations extends graft.QueryModule {
 
   /** Row-count envelope for `orders` relative to `customer`: TPC-H lands
     * 10 orders per customer; a load that breaks [8, 12]× signals a partial

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * group-count-bounded output), unioned into an audit table of
   * |candidates| rows.
   */
-object FdDiscovery {
+object FdDiscovery extends graft.QueryModule {
 
   /** (table, lhs, rhs) candidates; tables resolve in [[fdDiscovery]]. */
   val Candidates: Seq[(String, String, String)] = Seq(

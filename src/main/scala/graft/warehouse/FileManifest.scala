@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * Z-orders / buckets on); extending to other orderable parquet stats types
   * is mechanical.
   */
-object FileManifest {
+object FileManifest extends graft.QueryModule {
 
   /** One manifest row per (file, column): min/max envelope + row count.
     * Long form rather than wide so the schema is column-set independent

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * executed scan's file count and the cleared-registry fresh-session
   * path; the bench `file_skip` ledger prices files/bytes on vs off.
   */
-object FileSkip {
+object FileSkip extends graft.QueryModule {
 
   /** Files in the landed layout (one z-contiguous range each). */
   val NFiles = 32

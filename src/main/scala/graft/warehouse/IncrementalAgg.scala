@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * sidecar — the same reason `mv_*` views recompute their distinct columns
   * per partition in [[MatViews]]).
   */
-object IncrementalAgg {
+object IncrementalAgg extends graft.QueryModule {
 
   /** Modulus carving the deterministic change feed out of orders. */
   val Mod = 20

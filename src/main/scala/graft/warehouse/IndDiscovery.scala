@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * anti-join on the (usually dimension-sized) right side, plus one
   * row-mass join back — no pairwise anything.
   */
-object IndDiscovery {
+object IndDiscovery extends graft.QueryModule {
 
   /** (lhs table, lhs col, rhs table, rhs col) candidates. */
   val Candidates: Seq[(String, String, String, String)] = Seq(

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * view itself is nations-small; the recompute this replaces is a full
   * fact scan.
   */
-object IvmJoin {
+object IvmJoin extends graft.QueryModule {
 
   /** Late-order carve-out modulus. One value, both engines. */
   val NewOrderMod = 10

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * oracle checks; a production config derives them from
   * `spark.sql.autoBroadcastJoinThreshold` / executor memory).
   */
-object JoinAdvisor {
+object JoinAdvisor extends graft.QueryModule {
 
   /** Right side broadcastable below this many rows. */
   val BroadcastRowLimit = 1000L

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * by the flag-domain product (3·5·2 = 30 here) regardless of corpus size,
   * so the keying window is a plan constant and the fact join a broadcast.
   */
-object JunkDim {
+object JunkDim extends graft.QueryModule {
 
   /** High-value flag threshold on o_totalprice. One value, both engines. */
   val HighValue = 200000

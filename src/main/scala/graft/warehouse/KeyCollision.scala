@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * split doesn't serve. Two one-column scans beat one tripled shuffle at
   * any scale where the audit matters.
   */
-object KeyCollision {
+object KeyCollision extends graft.QueryModule {
 
   def keyCollision(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -16,7 +16,7 @@ import java.util.concurrent.ConcurrentHashMap
   * the executed scan of [[monthPrunedScan]] carries non-empty
   * `partitionFilters` (static pruning, no full-layout listing).
   */
-object PartitionedFact {
+object PartitionedFact extends graft.QueryModule {
 
   /** Month range of the pruned report (yyyyMM, inclusive) — one definition
     * interpolated into the Spark filter and the DuckDB oracle.

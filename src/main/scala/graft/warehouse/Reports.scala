@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * fact→documents on the encounter key — both sides bucketed by that key at
   * ingest time co-locate the join, and the aggregate is partial map-side.
   */
-object Reports {
+object Reports extends graft.QueryModule {
 
   /** First '.'-sentence of the narrative — the impression line. */
   private def impression(text: org.apache.spark.sql.Column) =

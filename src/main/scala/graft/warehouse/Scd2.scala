@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    and any partitioning, which is what makes the result hash-checkable
   *    and the merge idempotent at 100 TB.
   */
-object Scd2 {
+object Scd2 extends graft.QueryModule {
 
   /** Initial-load effective date (v1 rows). */
   val V1From = "1992-01-01"

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * 100 TB shape of the reference's modality column (`sql/01_schema.sql:110`
   * — one modality is most of the table).
   */
-object SkewAdvisor {
+object SkewAdvisor extends graft.QueryModule {
 
   /** Target rows per salted sub-task — ONE definition in both engines. */
   val TargetRows = 100L

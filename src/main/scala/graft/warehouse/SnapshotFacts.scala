@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * window, so the unpartitioned window is bounded by the calendar, not the
   * data.
   */
-object SnapshotFacts {
+object SnapshotFacts extends graft.QueryModule {
 
   /** The snapshot shape over any (orders, lineitem) pair: one co-keyed
     * join + milestone aggregate. Shared by the flat-table entry and the

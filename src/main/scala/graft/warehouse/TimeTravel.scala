@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * per-year count aggregate of the fact; the version spine × ledger join
   * is bounded by versions × files. Nothing row-grain crosses a shuffle.
   */
-object TimeTravel {
+object TimeTravel extends graft.QueryModule {
 
   /** Snapshots retained past the current version before a removed file
     * becomes vacuum-eligible. One value, both engines.

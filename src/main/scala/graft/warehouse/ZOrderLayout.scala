@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * cells a file would cover). ZOrderSpec asserts the boxes are tight on both
   * dimensions versus a single-column sort's boxes.
   */
-object ZOrderLayout {
+object ZOrderLayout extends graft.QueryModule {
 
   /** Curve resolution per dimension (z-values use 2·Bits bits). */
   val Bits = 16

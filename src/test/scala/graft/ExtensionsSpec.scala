@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import scala.collection.mutable.ArrayBuffer
+
 /** The SparkSessionExtensions entry point: functions injected at session
   * build time must resolve from plain SQL with no manual registration call
   * (TestSpark builds with `.withExtensions(new GraftExtensions())`).
@@ -67,5 +74,49 @@ class ExtensionsSpec extends SparkSpec {
     }
     assert(unfoldablePlane.getMessage.contains("graft_plane_dot"),
       unfoldablePlane.getMessage)
+  }
+
+  /** Messages the named logger emits at WARN or above while `body` runs. */
+  private def warningsOf(loggerName: String)(body: => Unit): Seq[String] = {
+    val seen = ArrayBuffer.empty[String]
+    val appender = new AbstractAppender("capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.synchronized(seen += e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(loggerName, Level.WARN)
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(loggerName, level)
+      appender.stop()
+    }
+    seen.synchronized(seen.toSeq)
+  }
+
+  test("registerAll is idempotent: a repeat call replaces no function") {
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val cosine = FunctionIdentifier("graft_cosine")
+    val replaced = "replaced a previously registered function"
+    val (_, _, builder) = GraftExtensions.functions.find(_._1 == cosine).get
+    // positive control: the capture does see a real replacement
+    val control = warningsOf(registry.getClass.getName) {
+      registry.createOrReplaceTempFunction("graft_cosine", builder, "built-in")
+    }
+    assert(control.exists(_.contains(replaced)), control)
+    registry.dropFunction(cosine)
+    GraftExtensions.registerAll(session) // restores the missing name
+    assert(registry.functionExists(cosine))
+    val second = warningsOf(registry.getClass.getName) {
+      GraftExtensions.registerAll(session)
+    }
+    assert(!second.exists(_.contains(replaced)), second)
+    assert(session.sql("SELECT graft_cosine(array(float(1.0)), " +
+      "array(float(2.0)))").head().getDouble(0) == 1.0)
   }
 }

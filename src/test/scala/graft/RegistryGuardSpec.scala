@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural guard against ORPHANED MODULES — the failure class that
@@ -7,69 +9,80 @@ import org.scalatest.funsuite.AnyFunSuite
   * module exposing `all`/`oracle` maps that nobody wired into
   * [[SparkEntry]], so its queries exist with ZERO gate coverage.
   *
-  * `VerifySchemaSpec`'s orphan test only checks SparkEntry-internal
-  * consistency (queries.keySet == oracleSql.keySet) — blind to a module
-  * absent from BOTH maps. This spec closes the hole structurally via
-  * [[Registry]]: the compiled classpath is scanned for every `graft.*`
-  * singleton whose `all` method has the registry shape
-  * `Map[String, (SparkSession, String) => DataFrame]`, and each such map
-  * must be a SUBSET of `SparkEntry.queries` (same for `oracle` vs
-  * `oracleSql`). Commenting out any one `++ module.all` line in SparkEntry
+  * The compiled classes directory is walked for every `graft.*` object with
+  * a public no-argument `all` method; each must extend [[QueryModule]] AND
+  * appear in [[SparkEntry.modules]]. Dropping any one module from that list
   * fails this spec with the module's name.
-  *
-  * The convention is discovered, not declared — a new module gets guarded
-  * the moment it compiles, with no registration step to forget (which is
-  * the whole point).
   */
 class RegistryGuardSpec extends AnyFunSuite {
 
+  /** Objects with an `all` that is not a query registry. */
+  private val notModules = Set("graft.analytics.OracleSql$") // = Queries.oracle
+
+  /** Every compiled `graft/**/*$.class` object with a public no-argument
+    * `all`, loaded WITHOUT initialization.
+    */
+  private lazy val scanned: Seq[Class[_]] = {
+    val root = new File(
+      SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith("$.class")) Seq(f) else Nil
+    walk(new File(root, "graft"))
+      .map(f => root.toPath.relativize(f.toPath).toString
+        .stripSuffix(".class").replace(File.separatorChar, '.'))
+      .filterNot(notModules)
+      .map(Class.forName(_, false, getClass.getClassLoader))
+      .filter(_.getMethods.exists(m =>
+        m.getName == "all" && m.getParameterCount == 0))
+      .sortBy(_.getName)
+  }
+
   test("the scan itself sees the known registry modules (not vacuous)") {
-    val names = Registry.modules.map(_.className).toSet
+    val names = scanned.map(_.getName).toSet
     for (expected <- Seq("graft.warehouse.SkewAdvisor$", "graft.ingest.JsonOps$",
         "graft.analytics.Queries$", "graft.observability.ColumnLineage$"))
       assert(names.contains(expected), s"classpath scan lost $expected")
-    assert(Registry.modules.size >= 90,
-      s"only ${Registry.modules.size} registry modules found — scan broke")
+    val (found, listed) = (scanned.size, SparkEntry.modules.size)
+    assert(listed >= 90, s"only $listed modules registered")
+    assert(found == listed,
+      s"scan found $found modules, SparkEntry.modules lists $listed")
   }
 
-  test("every module's `all` map is registered in SparkEntry.queries") {
-    val registered = SparkEntry.queries.keySet
-    val orphans = Registry.modules.flatMap { m =>
-      val missing = m.queries -- registered
-      if (missing.nonEmpty)
-        Some(s"${m.className}: ${missing.toSeq.sorted.mkString(", ")}")
-      else None
+  test("every compiled module extends QueryModule and is in SparkEntry.modules") {
+    val registered: Set[Class[_]] = SparkEntry.modules.map(_.getClass).toSet
+    val orphans = scanned.collect {
+      case c if !classOf[QueryModule].isAssignableFrom(c) =>
+        s"${c.getName}: does not extend QueryModule"
+      case c if !registered(c) => s"${c.getName}: missing from SparkEntry.modules"
     }
     assert(orphans.isEmpty,
-      s"ORPHANED MODULES — queries never wired into SparkEntry:\n  " +
+      s"ORPHANED MODULES — never wired into SparkEntry:\n  " +
         orphans.mkString("\n  "))
   }
 
-  test("no two modules declare the same query name (++ replaces silently)") {
+  test("a name declared by two modules fails the merge, naming both") {
     // the r9 near-miss: a new module declared "text_chunk_windows", which
-    // TextAnalysis already owned — SparkEntry's `++` silently replaced the
-    // original query AND its oracle, stripping its gate coverage while the
-    // subset checks above stayed green. A name must have exactly one owner.
-    val owners = Registry.modules
-      .flatMap(m => m.queries.map(_ -> m.simpleName))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val dups = owners.filter(_._2.size > 1)
-    assert(dups.isEmpty,
-      s"DUPLICATE QUERY NAMES across modules:\n  " +
-        dups.map { case (q, ms) => s"$q <- ${ms.mkString(", ")}" }
-          .mkString("\n  "))
+    // TextAnalysis already owned — SparkEntry's old `++` chain silently
+    // replaced the original query AND its oracle. A name has one owner.
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.union(Seq(StubFirst, StubSecond))(_.all))
+    assert(e.getMessage.contains("shared_name <- StubFirst, StubSecond"),
+      e.getMessage)
+    assert(!e.getMessage.contains("only_first"), e.getMessage)
   }
+}
 
-  test("every module's `oracle` map is registered in SparkEntry.oracleSql") {
-    val registered = SparkEntry.oracleSql.keySet
-    val orphans = Registry.modules.flatMap { m =>
-      val missing = m.oracles -- registered
-      if (missing.nonEmpty)
-        Some(s"${m.className}: ${missing.toSeq.sorted.mkString(", ")}")
-      else None
-    }
-    assert(orphans.isEmpty,
-      s"ORPHANED ORACLES — never wired into SparkEntry.oracleSql:\n  " +
-        orphans.mkString("\n  "))
-  }
+private object Stub {
+  val query: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+}
+
+private object StubFirst extends QueryModule {
+  val all = Map("shared_name" -> Stub.query, "only_first" -> Stub.query)
+  val oracle = Map.empty[String, String]
+}
+
+private object StubSecond extends QueryModule {
+  val all = Map("shared_name" -> Stub.query)
+  val oracle = Map.empty[String, String]
 }

@@ -1,6 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Output-boundary type-contract guard (see [[OutputContract]]).
   *
@@ -47,5 +49,17 @@ class VerifySchemaSpec extends SparkSpec {
     val ok = StructType(Seq(
       StructField("n", LongType), StructField("v", DoubleType)))
     assert(OutputContract.decimalColumns(ok).isEmpty)
+  }
+
+  test("oracle_sql.json round-trips SQL with control chars, quotes, backslashes") {
+    // a raw tab or CR in the file once made the driver's json.load fail
+    val oracle = Map(
+      "q_ctrl" -> "SELECT\t1 AS \"a\\b\",\r\n  '\u0001' AS c",
+      "q_plain" -> "SELECT 2")
+    val json = Verify.oracleJson(oracle)
+    assert(!json.exists(_ < ' '), s"raw control char in $json")
+    val parsed = new ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, String]]).asScala.toMap
+    assert(parsed == oracle.map { case (k, v) => s"$k.parquet" -> v })
   }
 }
